@@ -90,14 +90,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     // the shared harness session (GraftSession): identical scan-split
     // sizing, AQE posture and cleaner cadence across Bench / Verify /
     // PlanDump / StageProfile, so the bench can never measure under a
     // different plan than the dumps or the oracle gate (each knob is
     // documented in GraftSession)
-    val spark = GraftSession.build(cpus)
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.warmup(spark, sfDir)
 

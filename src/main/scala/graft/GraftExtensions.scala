@@ -51,8 +51,8 @@ object GraftFunctions {
   }
 
   /** Per-session twin of the extension's optimizer injection, for
-    * sessions built without `spark.sql.extensions` (Verify/Bench/
-    * PlanAudit and tests): installs [[graft.plans.HofFusionRule]]
+    * sessions built without `spark.sql.extensions` (GraftSession and
+    * tests): installs [[graft.plans.HofFusionRule]]
     * through the public experimental-optimizations hook. Idempotent. */
   def installOptimizations(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations

@@ -2,15 +2,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE session builder every harness main (Bench, Verify,
-  * PlanDump, StageProfile, the Tune* probes) goes through — the same
+  * PlanDump, StageProfile, Smoke, ScaleData) goes through — the same
   * scan-split sizing, AQE posture and cleaner cadence everywhere, so a
   * tuning change can never make the bench measure under one plan while
   * the plan dumps or the oracle gate run under another (the
-  * copy-paste drift the round-13 advice flagged).
+  * copy-paste drift the round-13 advice flagged). No other file under
+  * `src/main` calls `SparkSession.builder` (SessionBuilderGuardSpec).
   *
   * Config rationale (each knob documented where it is set):
   *  - shuffle.partitions = cpus: local default; cluster deployments
-  *    size it by data volume (every harness reads SPARK_GRAFT_CPUS).
+  *    size it by data volume. Every main takes `cpus` from
+  *    SPARK_GRAFT_CPUS, read once here (default 4).
   *  - AQE coalescing by SIZE (parallelismFirst=false, 64 MB
   *    advisory): reducer count should follow data volume, not core
   *    count — the correct 100 TB posture; operators whose post-shuffle
@@ -25,7 +27,10 @@ import org.apache.spark.sql.SparkSession
   *    bytes/parallelism dominates and the knob never binds.
   */
 object GraftSession {
-  def build(cpus: String): SparkSession = {
+  /** Local cores for every main: SPARK_GRAFT_CPUS, default 4. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  def build(cpus: String = GraftSession.cpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write the FULL `.explain("formatted")` output of selected
   * queries to files — the before/after plan evidence the optimization
@@ -12,6 +11,12 @@ import org.apache.spark.sql.SparkSession
   * final plan is what lands in the file (`explain` before execution
   * only shows `isFinalPlan=false`); the initial plan is appended too
   * so exchange placement pre-AQE stays visible.
+  *
+  * After each dump it prints `!! SINGLE_PARTITION_EXCHANGE in <name>`
+  * when the plan holds a `SinglePartition` exchange: the one plan shape
+  * that dies at 100 TB when its input is a full relation (scalar
+  * aggregates over already-tiny inputs are fine — the dump holds the
+  * context to tell them apart).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,9 +26,8 @@ object PlanDump {
       else SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     // shared harness session — dumps reflect exactly the bench's plans
-    val spark = GraftSession.build(cpus)
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     for (n <- names) {
@@ -37,10 +41,13 @@ object PlanDump {
           org.apache.spark.sql.execution.FormattedMode)
         val w = new java.io.PrintWriter(s"$outDir/${n}_$suffix.txt")
         try {
-          w.println(f"== $n @ $sfDir cpus=$cpus  executed in $sec%.2f s ==")
+          w.println(f"== $n @ $sfDir cpus=${GraftSession.cpus}  " +
+            f"executed in $sec%.2f s ==")
           w.println(fin)
         } finally w.close()
         println(f"[plandump] $n $sec%.2f -> $outDir/${n}_$suffix.txt")
+        if (fin.contains("SinglePartition"))
+          println(s"!! SINGLE_PARTITION_EXCHANGE in $n")
       } catch { case e: Throwable =>
         println(s"[plandump] $n FAILED: ${e.getMessage}")
       } finally InternalCaches.releaseAll()

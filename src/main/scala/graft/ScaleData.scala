@@ -1,15 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a scaled copy of the sf0.1 corpus tables so the BENCH
   * harness itself can run at sf1-equivalent volume: documents and
-  * embeddings are multiplied N× with the Stress perturbation scheme
-  * (per-copy id shift of 10M so modular selections pick analogous rows
-  * in every copy; a distinct per-copy marker token appended to text so
-  * copies are genuine near-duplicates, not degenerate exact replicas)
-  * and written as parquet under outDir. The remaining tables are left
+  * embeddings are multiplied N× (per-copy id shift of 10M so modular
+  * selections pick analogous rows in every copy; a distinct per-copy
+  * marker token appended to text so copies are genuine near-duplicates,
+  * not degenerate exact replicas) and written as parquet under outDir. The remaining tables are left
   * to the caller (symlinked to the sf0.1 originals — none of the
   * spot-benched queries read them at scale).
   *
@@ -19,13 +18,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val mult = if (args.length > 0) args(0).toInt else 10
     val out = if (args.length > 1) args(1) else "/tmp/graft_sfx10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.1"
 

@@ -1,12 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-style smoke: run SparkEntry.entry on sf0.001, print row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     df.show(5, false)

@@ -2489,19 +2489,32 @@ object SparkEntry {
     dst
   }
 
-  private def scratchDir(prefix: String, d: String): String = {
+  /** Every dir [[scratchDir]] has handed out in this JVM. ONE shutdown
+    * hook, registered on first use, deletes them all at exit — a hook
+    * per call would pile up one Thread per query build. */
+  private[graft] val scratchDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+
+  private lazy val scratchCleanupHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchDirs.forEach { p =>
+        try {
+          import java.nio.file.Files
+          if (Files.exists(p))
+            Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+              .forEach(f => Files.deleteIfExists(f))
+        } catch { case _: Throwable => () }
+      }))
+
+  /** Per-JVM scratch dir for `(prefix, d)`: the same path on every call
+    * within one JVM (pid-suffixed), deleted at JVM exit. */
+  private[graft] def scratchDir(prefix: String, d: String): String = {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
     val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
       s"${prefix}_${key}_${ProcessHandle.current().pid()}")
-    val p = dir.toPath
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import java.nio.file.Files
-        if (Files.exists(p))
-          Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }))
+    scratchCleanupHook
+    scratchDirs.add(dir.toPath)
     dir.toString
   }
 
@@ -4547,7 +4560,8 @@ object SparkEntry {
     }),
 
     // index size derives from the corpus count (autoPlanes) — the same
-    // defaults Stress.scala proves stay linear at 10× growth
+    // defaults the scale-up probe measured near-linear at 10× growth
+    // (BASELINE.md §4)
     "s2_ann_lsh" -> ((s, d) =>
       Similarity.annTopK(
         Tables.embeddings(s, d).filter(col("vec_id") % 5 === 0),
@@ -6111,7 +6125,7 @@ object SparkEntry {
       // times the serve path. nswBeamTopK is deterministic given the
       // graph, and the graph is a deterministic function of the
       // corpus — the oracle hash is unchanged from the live-build
-      // form. Build cost at scale is the Stress row.
+      // form. Build cost at scale is the s24 row of BASELINE.md §8.
       val dir = cached("s24nsw", d) { dir =>
         val cents = Similarity.kmeansCentroids(emb, "vec_id",
           "embedding", nCells = 64, iters = 2)
@@ -6646,7 +6660,7 @@ object SparkEntry {
     // path against the exact top-5 over the ten fixed serve queries.
     // With s30 (trained IVF at the same query set) this is the
     // oracle-checked anchor of the graph-vs-IVF recall frontier
-    // (BASELINE §10; graft.TuneGraphRecall sweeps the budget axis) —
+    // (BASELINE §10, which holds the budget-axis sweep) —
     // the number that says when the graph tier earns its edge-
     // coupling cost. Serve-only: the index loads from the scratch
     // cache, the exact leg is |Q|-fixed
@@ -7337,7 +7351,8 @@ object SparkEntry {
 
     // partition-pruned layout: write partitioned by lang, read back
     // with a partition filter — the scan must touch only 2 of the
-    // lang directories (PlanAudit shows the pruned partition count)
+    // lang directories (PlanDump's dump shows the pruned partition
+    // count)
     "q42_partition_pruning" -> ((s, d) => {
       val scratch = scratchDir("graft_part", d)
       Tables.documents(s, d).write.mode("overwrite")

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run selected queries once and print the completed-stage
   * cost table (stage wall, task-time sum, shuffle bytes, rows) so an
@@ -17,10 +16,9 @@ object StageProfile {
     val names = args.toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "2").toInt
     // shared harness session — profiles reflect exactly the bench's plans
-    val spark = GraftSession.build(cpus)
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[
       (Int, String, Long, Long, Long, Long, Long)]()
@@ -39,9 +37,7 @@ object StageProfile {
           m.outputMetrics.recordsWritten))
       }
     })
-    try spark.read.parquet(s"$sfDir/region.parquet")
-      .groupBy("r_name").count().count()
-    catch { case _: Throwable => () }
+    GraftSession.warmup(spark, sfDir)
     for (n <- names; r <- 1 to runs) {
       stages.clear()
       spark.sparkContext.setJobDescription(s"profile: $n run $r")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,12 +9,11 @@ object Verify {
     // iteration aid; the driver always passes exactly two args)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the shared harness session (GraftSession): the gate now runs
     // under the SAME scan/AQE settings as Bench and the plan dumps —
     // so the oracle proves exactly the plans the bench times (the
     // gate previously lacked the AQE coalescing posture)
-    val spark = GraftSession.build(cpus)
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // warmup is an optimization, not a precondition: a non-TPC-H sf

@@ -187,7 +187,7 @@ object InvertedIndex {
     * the query's terms touch (blocks_total), how many the θ bound let
     * it READ (blocks_read) and skip (blocks_skipped) — the proof the
     * upper bound actually prunes. Grows with the shortlist, not the
-    * corpus (Stress records the curve). */
+    * corpus (BASELINE.md §7, t30 row, records the curve). */
   def bm25WandReceipts(docs: DataFrame, idCol: Column, textCol: Column,
       isQuery: Column, k: Int = 5, blockSize: Int = 64,
       seedBlocks: Int = 4, k1: Double = 1.2, b: Double = 0.75)
@@ -196,17 +196,6 @@ object InvertedIndex {
       blockSize, seedBlocks, k1, b)
     receipts
   }
-
-  /** Top-k AND pruning receipts from ONE core pass — for callers that
-    * want both (the Stress probe, a serving audit): the separate
-    * [[bm25FromIndex]]/[[bm25WandReceipts]] wrappers would each build
-    * the index, score the seeds, and compute θ from scratch. */
-  def bm25FromIndexWithReceipts(docs: DataFrame, idCol: Column,
-      textCol: Column, isQuery: Column, k: Int = 5, blockSize: Int = 64,
-      seedBlocks: Int = 4, k1: Double = 1.2, b: Double = 0.75)
-      : (DataFrame, DataFrame) =
-    bm25WandCore(docs, idCol, textCol, isQuery, k, blockSize,
-      seedBlocks, k1, b)
 
   /** The pruning core — MaxScore essential terms × block-max WAND,
     * both driven by the same θ, both provably lossless:

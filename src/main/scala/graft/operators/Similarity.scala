@@ -201,8 +201,8 @@ object Similarity {
         col("cosine"))
   }
 
-  /** Index-size heuristic (the lesson measured in `graft.Stress`:
-    * constant index sizes make per-bucket population grow linearly with
+  /** Index-size heuristic (the lesson of the scale-up probe, BASELINE.md
+    * §4: constant index sizes make per-bucket population grow linearly with
     * the corpus and total ANN work quadratically). Hold TARGET BUCKET
     * POPULATION constant instead: planes = ceil(log2(ceil(n / target))),
     * clamped to [4, 24]. Computed with exact integer arithmetic so the
@@ -220,7 +220,8 @@ object Similarity {
     * guidance). Cells ∝ n (constant target cell population) looks
     * attractive — per-query candidates stay flat — but it makes the
     * DENSE ASSIGNMENT step (corpus × centroids) quadratic in n; the
-    * Stress probe measured s3 growing 7× at a 10× corpus under it.
+    * scale-up probe measured s3 growing 7× at a 10× corpus under it
+    * (BASELINE.md §4).
     * With nlist = ceil(√n), assignment work is n^1.5 and per-query
     * probe candidates grow as √n — balanced, the classic IVF
     * trade. IEEE sqrt is correctly rounded, so the DuckDB twin
@@ -945,7 +946,7 @@ object Similarity {
     * the point: at search time the corpus is m bytes of codes per
     * vector, never the raw floats. WARNING — deliberate baseline ONLY:
     * the q×n scan goes quadratic if callers grow queries with the
-    * corpus (measured 31 s at 10× in Stress); any composed pipeline or
+    * corpus (31 s at 10×, BASELINE.md §4); any composed pipeline or
     * corpus-scale deployment must route through the IVF pre-prune
     * instead ([[ivfPqTopK]]/[[ivfPqResidualTopK]] bound candidates to
     * the probed cells, ~q·√n·nProbe). Returns
@@ -2635,7 +2636,7 @@ object Similarity {
     * k-NN sets come from the ANN retrieval itself.
     *
     * Scale shape: pair count is candK·(|src| + |tgt|), never
-    * |src|·|tgt| — the Stress s47 legs pin the receipt. Everything
+    * |src|·|tgt| — BASELINE.md §12 (s47) holds the receipt. Everything
     * downstream of candidate scoring is the exact-baseline's integer
     * math verbatim (micro-quantized cosines, floor-division margins),
     * so the candidate-restricted twin stays SQL-expressible and the

@@ -420,4 +420,14 @@ class ExtendedOpsSpec extends SparkSpec {
     assert(img.h == 10 && img.w == 12)
     assert(ImageKernels.dims(a) == ((10, 12)))
   }
+
+  test("scratchDir: same (prefix, d) gives one path, registered once") {
+    val prefix = "graft_scratchspec"
+    val before = SparkEntry.scratchDirs.size
+    val a = SparkEntry.scratchDir(prefix, Sf0001)
+    val b = SparkEntry.scratchDir(prefix, Sf0001)
+    assert(a == b)
+    assert(SparkEntry.scratchDirs.contains(java.nio.file.Paths.get(a)))
+    assert(SparkEntry.scratchDirs.size == before + 1)
+  }
 }

@@ -13,7 +13,7 @@ class LeakageSplitSpec extends SparkSpec {
   private lazy val docs = Tables.documents(spark, Sf0001).persist()
 
   // near-dup copies: one marker token appended keeps the simhash
-  // within the band threshold (the Stress perturbation scheme)
+  // within the band threshold (the ScaleData perturbation scheme)
   private lazy val withCopies = docs.unionByName(
     docs.filter(col("doc_id") % 5 === 0)
       .withColumn("doc_id", col("doc_id") + 700000L)
