@@ -11,7 +11,10 @@ import org.apache.spark.sql.SparkSession
   * two back-to-back runs is the stable per-query cost. Caches are dropped
   * between runs, so the second run re-reads and re-shuffles everything; the
   * only thing it skips is JVM warm-up, which is exactly the noise we want
-  * out of the number.
+  * out of the number. That includes codegen: GraftSession's codegen confs
+  * keep every class run 1 compiled in Spark's generated-class cache, so
+  * run 2 reuses them instead of recompiling (at Spark's default 100
+  * entries a 230-260-class query evicted its own classes).
   *
   * Failure protocol: a query that throws is NOT timed as a success. Failed
   * names are collected, reported under a "failed" key in both JSON lines,

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
+
 /** Dev tool: write the FULL `.explain("formatted")` output of selected
   * queries to files — the before/after plan evidence the optimization
   * rounds commit under `plans/rNN/`.
@@ -7,10 +9,13 @@ package graft
   * Args: <outDir> <suffix> [names...]  (names default: all queries)
   * Each query's plan lands at `<outDir>/<name>_<suffix>.txt`.
   *
-  * The plan is captured AFTER one executed run (count()), so AQE's
-  * final plan is what lands in the file (`explain` before execution
-  * only shows `isFinalPlan=false`); the initial plan is appended too
-  * so exchange placement pre-AQE stays visible.
+  * The plan is captured AFTER one executed run of the query's OWN
+  * `queryExecution`, consuming every row and column as perfbench's
+  * action does, so AQE's final plan is what lands in the file
+  * (`isFinalPlan=true`; `explain` before execution only shows
+  * `isFinalPlan=false`, and `count()` would run a different Dataset);
+  * the initial plan is appended too so exchange placement pre-AQE
+  * stays visible.
   *
   * After each dump it prints `!! SINGLE_PARTITION_EXCHANGE in <name>`
   * when the plan holds a `SinglePartition` exchange: the one plan shape
@@ -34,11 +39,12 @@ object PlanDump {
       try {
         spark.sparkContext.setJobDescription(s"plandump: $n")
         val df = SparkEntry.queries(n)(spark, sfDir)
+        val qe = df.queryExecution
         val t0 = System.nanoTime()
-        df.count()
+        SQLExecution.withNewExecutionId(qe, Some("plandump"))(
+          qe.toRdd.foreach(_ => ()))
         val sec = (System.nanoTime() - t0) / 1e9
-        val fin = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val fin = qe.explainString(FormattedMode)
         val w = new java.io.PrintWriter(s"$outDir/${n}_$suffix.txt")
         try {
           w.println(f"== $n @ $sfDir cpus=${GraftSession.cpus}  " +

@@ -27,10 +27,11 @@ object Verify {
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        // per-query wall on stderr: the gate's cost profile must be
+        // per-query wall on stdout: the gate's cost profile must be
         // readable from any run's log (the round-11 gate starvation
-        // was only diagnosable after the fact)
-        System.err.println(f"[verify-t] $name ${
+        // was only diagnosable after the fact); stderr, which
+        // `sbt runMain` prefixes with [error], is kept for failures
+        println(f"[verify-t] $name ${
           (System.nanoTime() - t0) / 1e9}%.2f")
       }
       catch { case e: Throwable =>

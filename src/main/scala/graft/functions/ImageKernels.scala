@@ -34,6 +34,11 @@ import org.apache.spark.sql.functions.udf
   */
 object ImageKernels {
 
+  // every image stream here is an in-memory ByteArray*Stream, which
+  // ImageIO's default disk cache would still back with a temp file
+  // (JVM-wide setting, made once when the kernels load in a JVM)
+  ImageIO.setUseCache(false)
+
   final case class Img(data: Array[Float], h: Int, w: Int, c: Int) {
     def apply(y: Int, x: Int, ch: Int): Float = data((y * w + x) * c + ch)
   }
