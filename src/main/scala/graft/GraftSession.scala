@@ -49,6 +49,22 @@ import org.apache.spark.sql.SparkSession
   *    swapped ids between passes and recompiled 4 classes each. Without
   *    the id, one source compiles once (stack traces lose the id; the
   *    `codegenStageId` comment in the source keeps it).
+  *  - fs.file.impl = [[GraftLocalFileSystem]]: without `libhadoop`,
+  *    Hadoop's local FS forks a `chmod` process for every file and
+  *    directory it creates (a write's data file, its `.crc`, the
+  *    `_temporary` attempt dirs and `_SUCCESS`), 209 forks per warm
+  *    `eager_ingest` pass (q103 164, q79 45); the graft class sets the
+  *    same modes with one `java.nio` call. Hadoop caches one FileSystem per scheme for the
+  *    whole JVM, so, like the codegen cache, the class binds at the
+  *    JVM's first local-FS use: every main builds its session before
+  *    touching a file through Hadoop.
+  *  - streaming.checkpointFileManagerClass = Spark's
+  *    FileSystemBasedCheckpointFileManager: the default manager goes
+  *    through Hadoop's `FileContext`, whose local rename forks
+  *    `readlink` on every offset- and commit-log write (q103: 80 forks
+  *    a pass), and bypasses `fs.file.impl`. The FileSystem manager
+  *    writes the same logs by temp file and rename; the local rename is
+  *    atomic, so the replay and crash guarantees hold.
   */
 object GraftSession {
   /** Local cores for every main: SPARK_GRAFT_CPUS, default 4. */
@@ -58,12 +74,17 @@ object GraftSession {
   val CodegenCacheEntries: Int = 1000
 
   /** The confs that keep generated classes reusable across queries and
-    * passes (rationale above). Set here and nowhere else
-    * (SessionBuilderGuardSpec); the test session applies the same map. */
-  val CodegenConfs: Map[String, String] = Map(
+    * passes, and local file I/O free of process forks (rationale
+    * above). Set here and nowhere else (SessionBuilderGuardSpec); the
+    * test session applies the same map. */
+  val SessionConfs: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager"))
 
   def build(cpus: String = GraftSession.cpus): SparkSession = {
     val spark = SparkSession.builder()
@@ -75,7 +96,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.periodicGC.interval", "2min")
-      .config(CodegenConfs)
+      .config(SessionConfs)
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "262144"))
       .getOrCreate()

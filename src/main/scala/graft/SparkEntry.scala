@@ -5043,16 +5043,18 @@ object SparkEntry {
       // fixture (cross-run cached — training is the t38 cost); the
       // gated state tables are per-run
       val fix = cached("q103gate", d) { dd =>
-        TextAnalysis.qualityWeights(docs, col("doc_id"), col("text"),
-            col("source"), QualityPosSources,
+        val weights = TextAnalysis.qualityWeights(docs, col("doc_id"),
+            col("text"), col("source"), QualityPosSources,
             nBuckets = QualityBuckets, iters = QualityIters,
             lr = QualityLr)
-          .coalesce(1).write.mode("overwrite").parquet(s"$dd/weights")
+          .coalesce(1)
+        weights.write.mode("overwrite").parquet(s"$dd/weights")
+        SchemaMemo.recordWrite(weights, s"$dd/weights")
         scratchStreamBatches(dd,
           (0 until 3).map(i => docs.filter(col("doc_id") % 3 === i)))
         ()
       }
-      val w = s.read.parquet(s"$fix/weights")
+      val w = SchemaMemo.parquet(s, s"$fix/weights")
       val streamDir = s"$fix/in"
       val base = s"${scratchDir("q103gate", d)}/gated"
       EventStream.scoredGatedIngestOnce(
@@ -6129,11 +6131,13 @@ object SparkEntry {
       val dir = cached("s24nsw", d) { dir =>
         val cents = Similarity.kmeansCentroids(emb, "vec_id",
           "embedding", nCells = 64, iters = 2)
-        Similarity.knnGraph(emb, cents, "vec_id", "embedding",
+        val graph = Similarity.knnGraph(emb, cents, "vec_id", "embedding",
             degree = 6, nProbe = 2)
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/graph")
+          .coalesce(1)
+        graph.write.mode("overwrite").parquet(s"$dir/graph")
+        SchemaMemo.recordWrite(graph, s"$dir/graph")
       }
-      Similarity.nswBeamTopK(emb, s.read.parquet(s"$dir/graph"),
+      Similarity.nswBeamTopK(emb, SchemaMemo.parquet(s, s"$dir/graph"),
         emb.filter(col("vec_id") % 25 === 0), "vec_id", "embedding",
         k = 5, beamWidth = 8, rounds = 3)
     }),

@@ -14,8 +14,10 @@ import org.apache.spark.sql.Column
   * md5, never from `rand()` or `xxhash64` (SURVEY.md §7 "hard parts" #1).
   */
 object Tables {
+  /** A base table; its schema is inferred once per listing and conf
+    * set ([[SchemaMemo]]), not by a footer job on every read. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    SchemaMemo.parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
@@ -49,12 +51,6 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame =
     table(s, d, "embeddings")
-
-  /** md5 hex of a column rendered as a string; identical in DuckDB as
-    * `md5(CAST(c AS VARCHAR))` provided the string rendering matches
-    * (safe for string and integral columns; avoid for floats/timestamps).
-    */
-  def md5Str(c: Column): Column = md5(c.cast("string").cast("binary"))
 
   /** Deterministic "random" in [0, 1): the first 8 md5 hex digits of
     * (key, seed) parsed as an unsigned 32-bit int, scaled by 2^-32.

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -88,11 +86,4 @@ case class SquaredL2Expr(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): SquaredL2Expr =
     copy(left = newLeft, right = newRight)
-}
-
-object SquaredL2Expr {
-  /** Column-level entry point: `graft_squared_l2(a, b)`. */
-  def sqDist(a: Column, b: Column): Column =
-    GraftSqlBridge.column(SquaredL2Expr(
-      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }

@@ -350,24 +350,6 @@ object InvertedIndex {
   def newestCompaction(tip: Int, every: Int): Int =
     ((tip + 1) / every) * every - 1
 
-  /** BM25 top-k served from a posting relation (any union of
-    * segments): tf is reassembled by counting each doc's occurrences
-    * in the payloads, then scored by the SAME definition as t26
-    * ([[TextAnalysis.bm25FromTf]]). */
-  def bm25FromPostings(postings: DataFrame, qterms: DataFrame,
-      k: Int = 5, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val tf = postings
-      .select(col("tok").as("token"),
-        explode(split(col("payload"), ",")).as("dp"))
-      .select(col("token"),
-        split(col("dp"), ":").getItem(0).cast("long").as("doc_id"))
-      .groupBy(col("doc_id"), col("token"))
-      .agg(count(lit(1)).as("tf"))
-    // no persist: bm25FromTf's doc_id repartition is the shared
-    // materialization point for its three internal consumers
-    TextAnalysis.bm25FromTf(tf, qterms, k, k1, b)
-  }
-
   /** The full t36 composition: build per-batch segments, compact at
     * the newest policy boundary, read compaction + suffix, serve the
     * t26-shaped BM25 from the reassembled postings. Output carries

@@ -145,15 +145,11 @@ object Pca {
     }.toDF("comp", "idx", "v_milli", "lambda_scaled", "evr_micro")
   }
 
-  /** Project vectors onto the component relation: reduced coordinate
-    * r_c = floor(Σ_i v_ci·cx_i / 10) — an exact-integer array<long>
-    * per vector, assembled position-sorted. Broadcast join against
-    * the d·k component relation; no corpus shuffle beyond the
+  /** Project centered vectors onto the component relation: reduced
+    * coordinate r_c = floor(Σ_i v_ci·cx_i / 10) — an exact-integer
+    * array<long> per vector, assembled position-sorted. Broadcast join
+    * against the d·k component relation; no corpus shuffle beyond the
     * (vid, comp) aggregation. */
-  def projectReduced(emb: DataFrame, idCol: String, vecCol: String,
-      comps: DataFrame, mu: DataFrame): DataFrame =
-    projectFromCentered(centered(emb, idCol, vecCol, mu), comps)
-
   private def projectFromCentered(cent: DataFrame,
       comps: DataFrame): DataFrame =
     cent

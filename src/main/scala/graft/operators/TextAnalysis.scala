@@ -77,12 +77,6 @@ object TextAnalysis {
         .cast("double") / size(toks))
   }
 
-  /** Punctuation-character ratio of the raw text. */
-  def punctRatio(text: Column): Column =
-    when(length(text) === 0, lit(0.0)).otherwise(
-      (length(text) - length(regexp_replace(text, "[.,;:!?'\"()]", "")))
-        .cast("double") / length(text))
-
   /** Mean token length in characters. */
   def meanTokenLen(text: Column): Column = {
     val toks = tokens(text)

@@ -17,19 +17,12 @@ import graft.operators.{Metrics, PipelineOps}
   * At scale every step is embarrassingly parallel except the two global
   * orderings, which ride PipelineOps' range-partitioned rank.
   */
-/** The reference's 5-feature record (FIXTURES.md §1.1) as a typed row —
-  * `Dataset[ImageRecord]` is the typed hot path (SURVEY §1.4). */
+/** The reference's 5-feature record (FIXTURES.md §1.1) as a typed row:
+  * the column shape `ImageSource.toRecordSchema` projects to. */
 final case class ImageRecord(encoded: Array[Byte], format: String,
     label: Int, height: Int, width: Int)
 
 object ImageSource {
-
-  /** Typed view of the record-schema frame. */
-  def asRecords(df: DataFrame): org.apache.spark.sql.Dataset[ImageRecord] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.as[ImageRecord]
-  }
 
   /** S1+S2: scan `<root>/<class>/<file>` into rows of
     * (path, class_name, encoded). */

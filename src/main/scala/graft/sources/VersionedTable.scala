@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.SchemaMemo
+
 /** Versioned snapshot table with time travel — the manifest-commit
   * protocol of the open lakehouse formats (Delta/Iceberg's core idea,
   * reduced to its essence): data files are INVISIBLE until a manifest
@@ -66,6 +68,7 @@ object VersionedTable {
     val f = fs(df.sparkSession, dir)
     val dataDir = new Path(dir, s"data/v$v")
     df.write.mode("overwrite").parquet(dataDir.toString)
+    SchemaMemo.recordWrite(df, dataDir.toString)
     val newFiles = f.listStatus(dataDir).toSeq
       .map(_.getPath.getName)
       .filter(_.endsWith(".parquet"))
@@ -95,7 +98,7 @@ object VersionedTable {
   private def fileCounts(spark: SparkSession, dataDir: Path,
       relPrefix: String): Seq[String] = {
     import org.apache.spark.sql.functions._
-    val counted = spark.read.parquet(dataDir.toString)
+    val counted = SchemaMemo.parquet(spark, dataDir.toString)
       .groupBy(col("_metadata.file_path").as("fp"))
       .agg(count(lit(1)).as("n"))
       .collect().toSeq
@@ -121,7 +124,7 @@ object VersionedTable {
   private def fileStats(spark: SparkSession, dataDir: Path,
       relPrefix: String, statsCol: String): Seq[String] = {
     import org.apache.spark.sql.functions._
-    spark.read.parquet(dataDir.toString)
+    SchemaMemo.parquet(spark, dataDir.toString)
       .groupBy(col("_metadata.file_path").as("fp"))
       .agg(min(col(statsCol)).cast("long").as("mn"),
         max(col(statsCol)).cast("long").as("mx"))
@@ -319,7 +322,7 @@ object VersionedTable {
     val pos = (0 until k).map(s => pmod(
       graft.Tables.hashU32(col(colName), BloomSeedBase + s),
       lit(bits.toLong)).cast("int"))
-    spark.read.parquet(dataDir.toString)
+    SchemaMemo.parquet(spark, dataDir.toString)
       .select(col("_metadata.file_path").as("fp"),
         explode(array(pos: _*)).as("p"))
       .groupBy(col("fp")).agg(collect_set(col("p")).as("ps"))
@@ -517,6 +520,7 @@ object VersionedTable {
           if (!f.rename(dataDir, vDir))
             throw new java.io.IOException(
               s"could not place data/v$v at $dir (stale dir?)")
+          SchemaMemo.recordWrite(df, vDir.toString)
           val newFiles = newNames.map(n => s"data/v$v/$n")
           // rebase point: carry the lists of the version the claim
           // actually landed on top of (v - 1), not the pre-claim read
@@ -735,12 +739,13 @@ object VersionedTable {
     import spark.implicits._
     val tmp = new Path(checkpointRoot(dir), s".v$v.tmp-${
       System.nanoTime()}")
-    all.toDF("kind", "rel", "ver", "ts")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val rows = all.toDF("kind", "rel", "ver", "ts")
+    rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val dst = new Path(checkpointRoot(dir), s"v$v")
     if (f.exists(dst)) { f.delete(tmp, true) } // idempotent re-write
     else if (!f.rename(tmp, dst))
       throw new java.io.IOException(s"checkpoint v$v lost the rename race")
+    else SchemaMemo.recordWrite(rows, dst.toString)
     try {
       val htmp = new Path(checkpointRoot(dir), "_last_checkpoint.tmp")
       val out = f.create(htmp, true)
@@ -772,7 +777,7 @@ object VersionedTable {
   private def checkpointRows(spark: SparkSession, dir: String,
       v: Int): Seq[(String, String, Int, Long)] = {
     import spark.implicits._
-    spark.read.parquet(new Path(checkpointRoot(dir), s"v$v").toString)
+    SchemaMemo.parquet(spark, new Path(checkpointRoot(dir), s"v$v").toString)
       .select("kind", "rel", "ver", "ts")
       .as[(String, String, Int, Long)].collect().toSeq
   }
@@ -939,6 +944,7 @@ object VersionedTable {
     val f = fs(spark, dir)
     val dvDir = new Path(dir, s"deletes/v$v")
     keys.write.mode("overwrite").parquet(dvDir.toString)
+    SchemaMemo.recordWrite(keys, dvDir.toString)
     val newDvs = f.listStatus(dvDir).toSeq
       .map(_.getPath.getName)
       .filter(_.endsWith(".parquet"))
@@ -989,11 +995,13 @@ object VersionedTable {
         .filter(_.endsWith(".parquet")).sorted.map(n => s"$prefix/$n")
     val dataDir = new Path(dir, s"data/v$v")
     updates.write.mode("overwrite").parquet(dataDir.toString)
+    SchemaMemo.recordWrite(updates, dataDir.toString)
     val newFiles = listed(dataDir, s"data/v$v")
     val dvDir = new Path(dir, s"deletes/v$v")
-    spark.read.parquet(dataDir.toString)
+    val dvKeys = SchemaMemo.parquet(spark, dataDir.toString)
       .select(col(keyCol)).distinct()
-      .write.mode("overwrite").parquet(dvDir.toString)
+    dvKeys.write.mode("overwrite").parquet(dvDir.toString)
+    SchemaMemo.recordWrite(dvKeys, dvDir.toString)
     val newDvs = listed(dvDir, s"deletes/v$v")
     val json = manifestJson(spark, dir, prev)
     val (files, dvs) = manifestLists(json, prev)
@@ -1343,12 +1351,15 @@ object VersionedTable {
     * time-traveling to a pre-widening version still returns exactly
     * that version's narrower schema (its manifest lists only old
     * files). Footer merging is a distributed O(files) metadata pass,
-    * the same cost the scan's split planning already pays. */
+    * the same cost the scan's split planning already pays; every commit
+    * here records the schema it wrote ([[SchemaMemo.recordWrite]]), so
+    * reading back files this JVM committed folds the recorded schemas
+    * instead and runs no job. */
   private def readFiles(spark: SparkSession, dir: String, v: Int,
       fileRels: Seq[String], dvRels: Seq[String]): DataFrame = {
     require(fileRels.nonEmpty, s"version $v manifest lists no files")
     val files = fileRels.map(rel => new Path(dir, rel).toString)
-    val data = spark.read.option("mergeSchema", "true").parquet(files: _*)
+    val data = SchemaMemo.parquet(spark, files, mergeSchema = true)
     if (dvRels.isEmpty) data
     else {
       import org.apache.spark.sql.functions._
@@ -1357,7 +1368,7 @@ object VersionedTable {
           .map(_.group(1).toInt)
           .getOrElse(throw new IllegalArgumentException(
             s"deletion vector outside deletes/vN/: $rel"))
-        spark.read.parquet(new Path(dir, rel).toString)
+        SchemaMemo.parquet(spark, new Path(dir, rel).toString)
           .withColumn("__dv_v", lit(dvV))
       }.reduce(_ unionByName _)
       val keyCols = dv.columns.filterNot(_ == "__dv_v")

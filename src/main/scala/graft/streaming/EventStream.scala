@@ -33,7 +33,8 @@ object EventStream {
         col("event_type"), col("cnt"), col("sum_value"))
 
   /** Read `events.parquet`-shaped data as a file stream. The schema is
-    * taken from a batch peek (file streams require an explicit schema);
+    * taken from a batch peek (file streams require an explicit schema),
+    * inferred once per listing of the original path ([[graft.SchemaMemo]]);
     * maxFilesPerTrigger bounds each micro-batch — the C3 backpressure
     * analogue. ns-timestamps ride the same nanosAsLong + truncate path
     * as Tables.events. */
@@ -58,7 +59,7 @@ object EventStream {
     * micro-batch (the C3 backpressure analogue). */
   def parquetFileStream(spark: SparkSession, fileOrDir: String): DataFrame = {
     val dir = asStreamDir(fileOrDir)
-    spark.readStream.schema(spark.read.parquet(dir).schema)
+    spark.readStream.schema(graft.SchemaMemo.parquet(spark, fileOrDir).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
   }
@@ -66,7 +67,7 @@ object EventStream {
   def eventsFileStream(spark: SparkSession, fileOrDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = asStreamDir(fileOrDir)
-    val schema = spark.read.parquet(dir).schema
+    val schema = graft.SchemaMemo.parquet(spark, fileOrDir).schema
     val raw = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)

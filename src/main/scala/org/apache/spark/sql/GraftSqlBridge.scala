@@ -35,6 +35,18 @@ object GraftSqlBridge {
       case _ => None
     }
 
+  /** `schema` with every field, element and value nullable — what
+    * Spark's file sources turn an inferred data schema into. */
+  def asNullable(schema: types.StructType): types.StructType =
+    schema.asNullable
+
+  /** Spark's own merge of two file schemas, as parquet's `mergeSchema`
+    * inference folds them: left's fields first, new fields appended,
+    * nested structs merged, incompatible types rejected. */
+  def mergeSchemas(left: types.StructType, right: types.StructType,
+      caseSensitive: Boolean): types.StructType =
+    left.merge(right, caseSensitive)
+
   /** Block until the listener bus has delivered every posted event —
     * the deterministic replacement for sleep-and-hope drains in
     * listener-based profiling tools (a slow bus under load would

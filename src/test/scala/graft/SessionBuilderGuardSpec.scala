@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** Plain-file guards, no SparkSession: every main plans under the one
   * session posture, so `SparkSession.builder` may appear in
   * `GraftSession.scala` and nowhere else under `src/main/scala`, and
-  * the codegen conf keys are named there alone: the test session
-  * applies `GraftSession.CodegenConfs`. */
+  * the session conf keys (codegen cache, local FS, streaming checkpoint
+  * manager) are named there alone: the test session applies
+  * `GraftSession.SessionConfs`. */
 class SessionBuilderGuardSpec extends AnyFunSuite {
 
   /** `.scala` files under `root`, other than GraftSession.scala, whose
@@ -29,8 +30,8 @@ class SessionBuilderGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, s"SparkSession.builder outside GraftSession: $found")
   }
 
-  test("only GraftSession names the codegen confs") {
-    for (key <- GraftSession.CodegenConfs.keys) {
+  test("only GraftSession names the session confs") {
+    for (key <- GraftSession.SessionConfs.keys) {
       val found = offenders(Paths.get("src"), key)
       assert(found.isEmpty, s"$key outside GraftSession: $found")
     }

@@ -12,9 +12,10 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the harness's codegen confs: at Spark's 100-entry cache the
-      // suites evict and recompile each other's generated classes
-      .config(GraftSession.CodegenConfs)
+      // the harness's session confs: at Spark's 100-entry codegen
+      // cache the suites evict and recompile each other's generated
+      // classes, and the stock local FS forks a chmod per file written
+      .config(GraftSession.SessionConfs)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     // the full extension surface (functions, optimizer rule, planner
